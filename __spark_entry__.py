@@ -6,8 +6,8 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in the ``etl_dados_ibge_sp_spark`` package
-(registry.py / registry_ext.py / registry_ext2.py); this file stays a
-thin adapter.
+(registry.py and the query families under queries/); this file stays
+a thin adapter.
 """
 
 from __future__ import annotations

@@ -13,9 +13,9 @@ timings):
 - stdout carries ONE COMPACT JSON line (metric, value, n_queries,
   mean_query_sec, regressions, sf) that always fits the tail capture.
 
-Coverage: the suite is ``all_queries_with_pending()`` — all registered
-queries plus any deferred-registration ones — benchmarked in sorted
-name order so BENCH_full.json diffs cleanly round over round.  No
+Coverage: the suite is ``all_queries()`` — every registered query —
+benchmarked in sorted name order so BENCH_full.json diffs cleanly
+round over round.  No
 silent caps: every query the engine ships is timed.
 
 Methodology: steady-state, min-of-3 with INTERLEAVED samples.  A
@@ -43,8 +43,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
-from etl_dados_ibge_sp_spark.registry import (  # noqa: E402
-    all_queries_with_pending)
+from etl_dados_ibge_sp_spark.registry import all_queries  # noqa: E402
 from etl_dados_ibge_sp_spark.session import get_spark  # noqa: E402
 
 
@@ -111,7 +110,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="etl-ibge-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries_with_pending()
+    queries = all_queries()
     names = sorted(queries)
 
     # Optional subset for local iteration: bench.py q1 q2 ...

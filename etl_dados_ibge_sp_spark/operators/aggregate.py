@@ -101,7 +101,7 @@ def approx_percentiles(df: DataFrame, group_cols: Sequence[str],
     its partition into a bounded-size summary (error <= 1/accuracy in
     rank), so the exchange carries KBs per group no matter how many
     rows feed it.  This is the switch the exact operator's docstring
-    prescribes (``registry_ext.q_value_percentiles``); keep the exact
+    prescribes (``queries.analytics.q_value_percentiles``); keep the exact
     form for oracle-checkable correctness at test scale.
 
     Output columns: ``p<pct*100:g>`` per requested percentile

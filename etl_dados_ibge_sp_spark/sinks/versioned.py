@@ -605,7 +605,7 @@ def merge_version(spark: SparkSession, table_dir: str,
 
     Executed as the tag-union + per-key ``max_by`` shape (the scale
     form `merge_upsert` pins against its full-outer-join oracle,
-    registry_ext2.py: one map-side-combinable aggregate instead of
+    queries/lakehouse.py: one map-side-combinable aggregate instead of
     shuffling snapshot against delta as a join); deletes are one
     anti-join on distinct keys.  ``updates`` must match the table's
     schema; a key in both ``updates`` and ``deletes`` is deleted.

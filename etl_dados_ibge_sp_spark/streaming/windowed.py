@@ -750,7 +750,7 @@ def stream_decay_sum(
         spark: SparkSession, sf_dir: str,
         state_partitions: int = STATE_PARTITIONS) -> DataFrame:
     """Streaming restatement of the batch ``events_decay_sum`` query
-    (registry_pending2.decay_sum_frame): per-user EWMA (alpha=1/2)
+    (queries/events.decay_sum_frame): per-user EWMA (alpha=1/2)
     over the trailing 8 events as an ``applyInPandasWithState``
     fold — state is the trailing <=8 scaled longs (~64 bytes/user,
     O(active users) total, independent of history length), and every
@@ -767,7 +767,7 @@ def stream_decay_sum(
     path processes the table in one batch."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    frame = 8  # registry_pending2.DECAY_FRAME (kept literal: this
+    frame = 8  # queries/events.DECAY_FRAME (kept literal: this
     #            module must stay importable without the registry)
     stream = (
         _events_stream(spark, sf_dir, "decay_sum")

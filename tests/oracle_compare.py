@@ -81,3 +81,31 @@ def compare(spark_df, oracle_df: pd.DataFrame, float_tol: float = 1e-9,
                 errors.append(f"{name}.{c}: {int(neq.sum())} mismatches "
                               f"(e.g. row {i}: {ca.iloc[i]!r} != {cb.iloc[i]!r})")
     return errors
+
+
+def assert_registered_matches_oracle(name: str, spark, sf_dir: str) -> None:
+    """Run registered query ``name`` and its oracle; fail on an empty
+    Spark result (a 0-row result trivially hash-matches) or on any
+    mismatch."""
+    from etl_dados_ibge_sp_spark.registry import REGISTRY, _load_queries
+
+    _load_queries()
+    spec = REGISTRY[name]
+    df = spec.fn(spark, sf_dir)
+    assert df.count() > 0, f"{name}: empty result is a weak test"
+    errors = compare(df, duckdb_run(spec.sql, sf_dir), name=name)
+    assert not errors, "\n".join(errors)
+
+
+def assert_wired(names) -> None:
+    """Each of ``names`` is registered once, through ``register``, with
+    a non-empty oracle and a callable."""
+    from etl_dados_ibge_sp_spark.registry import REGISTRY, _load_queries
+
+    assert len(names) == len(set(names)), "duplicate names"
+    _load_queries()
+    for name in names:
+        spec = REGISTRY[name]
+        assert isinstance(spec.sql, str) and spec.sql.strip(), \
+            f"{name}: no oracle"
+        assert callable(spec.fn), f"{name}: fn not callable"

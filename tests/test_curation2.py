@@ -11,8 +11,9 @@ from pyspark.sql import functions as F
 
 from etl_dados_ibge_sp_spark.operators import dedup as D
 from etl_dados_ibge_sp_spark.operators import text as T
-from etl_dados_ibge_sp_spark import registry_ext  # noqa: F401 (registration)
-from etl_dados_ibge_sp_spark.registry import REGISTRY
+from etl_dados_ibge_sp_spark.registry import REGISTRY, all_queries
+
+all_queries()  # registers every family
 
 
 def test_redact_pii_all_categories(spark):

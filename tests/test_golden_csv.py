@@ -18,6 +18,7 @@ fractional values, the rest are float-formatted integers summing 1925).
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -52,6 +53,10 @@ LEVEL_HISTOGRAM = {0: 1, 1: 1, 2: 5, 3: 9, 4: 19,
 
 @pytest.fixture(scope="module")
 def golden(spark):
+    # Self-activating: the laws run wherever the reference checkout
+    # provides the artifact, and skip (naming it) where it does not.
+    if not os.path.exists(GOLDEN):
+        pytest.skip(f"reference artifact {GOLDEN} is absent")
     df = read_csv_sniffed(spark, GOLDEN).cache()
     yield df
     df.unpersist()

@@ -6,9 +6,9 @@ from __future__ import annotations
 
 import pytest
 
-from etl_dados_ibge_sp_spark.registry import all_queries_with_pending
+from etl_dados_ibge_sp_spark.registry import all_queries
 
-QUERIES = all_queries_with_pending()
+QUERIES = all_queries()
 
 CHECKED = [
     "corpus_mix",

@@ -1,13 +1,14 @@
-"""Plan-shape and semantics laws for the second pending tranche
-(registry_pending2).  Oracle parity itself runs through the
-parametrized test in test_pending_r05.py — these tests pin the
+"""Plan-shape and semantics laws for TPC-H, event and corpus query
+shapes.  Oracle parity itself runs through the parametrized test in
+test_oracle_parity.py — these tests pin the
 100-TB-relevant PLAN properties the oracle cannot see: decorrelation
 to semi/anti joins, CNF pushdown of disjunctive predicates, column
 pruning through set ops, and the single-shuffle window fold."""
 
 from __future__ import annotations
 
-from etl_dados_ibge_sp_spark import registry_pending2 as P2
+from etl_dados_ibge_sp_spark.queries import (
+    corpus, dedup, embeddings, events, tpch)
 
 
 def _plan(df) -> str:
@@ -22,13 +23,13 @@ def _formatted(df) -> str:
 
 
 def test_q4_exists_plans_semi_join(spark, sf_dir):
-    plan = _plan(P2._q_order_priority_exists(spark, sf_dir))
+    plan = _plan(tpch._q_order_priority_exists(spark, sf_dir))
     assert "LeftSemi" in plan, f"EXISTS not decorrelated:\n{plan[:1500]}"
     assert "Subquery" not in plan
 
 
 def test_q16_not_in_plans_anti_join(spark, sf_dir):
-    plan = _plan(P2._q_brand_supplier_counts(spark, sf_dir))
+    plan = _plan(tpch._q_brand_supplier_counts(spark, sf_dir))
     assert "LeftAnti" in plan, f"NOT IN not an anti join:\n{plan[:1500]}"
 
 
@@ -38,7 +39,7 @@ def test_q19_disjunction_pushed_to_both_scans(spark, sf_dir):
     OR (brand AND size) factor, the lineitem scan the quantity-range
     disjunction.  Without this, a 100-TB lineitem scan reads every
     row and the filter runs post-join."""
-    fp = _formatted(P2._q_disjunctive_filter_revenue(spark, sf_dir))
+    fp = _formatted(tpch._q_disjunctive_filter_revenue(spark, sf_dir))
     pushed = [ln for ln in fp.splitlines() if "PushedFilters" in ln]
     assert any("p_brand" in ln and "Or(And(" in ln for ln in pushed), \
         f"no disjunctive part filter pushed:\n{pushed}"
@@ -50,12 +51,12 @@ def test_except_prunes_to_key_columns(spark, sf_dir):
     """EXCEPT must not block column pruning: both orders scans read
     exactly (o_custkey, o_orderdate) — an unpruned set-op scan is a
     5x read amplification at scale."""
-    fp = _formatted(P2._q_set_except_churned(spark, sf_dir))
+    fp = _formatted(events._q_set_except_churned(spark, sf_dir))
     schemas = [ln for ln in fp.splitlines() if "ReadSchema" in ln]
     assert schemas, "no parquet scans found"
     for ln in schemas:
         assert "o_custkey" in ln and "o_totalprice" not in ln, ln
-    plan = _plan(P2._q_set_except_churned(spark, sf_dir))
+    plan = _plan(events._q_set_except_churned(spark, sf_dir))
     assert "LeftAnti" in plan, "EXCEPT should plan as anti join"
 
 
@@ -65,14 +66,14 @@ def test_decay_sum_single_hash_exchange(spark, sf_dir):
     round-robin from load_table.  The oracle's self-join formulation
     would cost two joins plus an aggregate — the fold IS the scale
     advantage, so pin it."""
-    plan = _plan(P2._q_events_decay_sum(spark, sf_dir))
+    plan = _plan(events._q_events_decay_sum(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
 
 
 def test_pivot_schema_is_stable(spark, sf_dir):
     """Explicit pivot values => stable, ordered output schema with no
     inference job over the data."""
-    df = P2._q_pivot_event_counts(spark, sf_dir)
+    df = events._q_pivot_event_counts(spark, sf_dir)
     assert df.columns == ["day", "view", "click", "signup",
                           "purchase", "error"]
 
@@ -81,7 +82,7 @@ def test_quantize_int8_saturates_exactly(spark, sf_dir):
     """Symmetric int8 law: every quantized vector uses the full range
     — the max-|x| element maps to exactly ±127, and no element
     escapes [-127, 127]."""
-    rows = P2._q_embed_quantize_int8(spark, sf_dir).collect()
+    rows = embeddings._q_embed_quantize_int8(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert -127 <= r["q_min"] and r["q_max"] <= 127
@@ -97,7 +98,7 @@ def test_stream_decay_matches_batch_exactly(spark, sf_dir):
         stream_decay_sum
 
     batch = {(r["user_id"], r["event_id"]): r["decay_sum"]
-             for r in P2._q_events_decay_sum(spark, sf_dir).collect()}
+             for r in events._q_events_decay_sum(spark, sf_dir).collect()}
     stream = {(r["user_id"], r["event_id"]): r["decay_sum"]
               for r in stream_decay_sum(spark, sf_dir).collect()}
     assert batch == stream
@@ -124,7 +125,7 @@ def test_decay_fold_matches_bruteforce_with_nulls(spark):
             eid += 1
             rows.append((uid, eid, i * 1000, v))
             buf.append(0 if v is None else math.floor(v * 10000))
-            win = buf[-P2.DECAY_FRAME:]
+            win = buf[-events.DECAY_FRAME:]
             expect[(uid, eid)] = sum(
                 x * 2 ** j for j, x in enumerate(win))
     df = spark.createDataFrame(
@@ -132,14 +133,14 @@ def test_decay_fold_matches_bruteforce_with_nulls(spark):
     ).selectExpr("user_id", "event_id",
                  "timestamp_micros(us) AS ts", "value")
     got = {(r["user_id"], r["event_id"]): r["decay_sum"]
-           for r in P2.decay_sum_frame(df).collect()}
+           for r in events.decay_sum_frame(df).collect()}
     assert got == expect
 
 
 def test_tfidf_topk_at_most_three_per_doc(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    df = P2._q_text_tfidf_topk(spark, sf_dir)
+    df = corpus._q_text_tfidf_topk(spark, sf_dir)
     per_doc = df.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.max("rnk").alias("max_rnk"))
@@ -171,7 +172,7 @@ def test_ohlc_matches_bruteforce_with_ties(spark, sf_dir, tmp_path):
     got = {(r["event_type"], r["bar"]):
            (r["open_e4"], r["high_e4"], r["low_e4"], r["close_e4"],
             r["n_events"])
-           for r in P2._q_events_ohlc_bars(spark,
+           for r in events._q_events_ohlc_bars(spark,
                                            str(tmp_path / "d")).collect()}
     # bar 0: open = event 1 (5.0, lowest event_id at earliest ts),
     # close = event 4 (7.0); high 9.0, low 1.0.
@@ -219,7 +220,7 @@ def test_dup_ngram_spans_matches_bruteforce(spark):
             [(k, v) for k, v in docs.items()], "doc_id bigint, text string"
         ).write.parquet(os.path.join(td, "documents.parquet"))
         got = {r["doc_id"]: (r["n_grams"], r["n_dup_grams"])
-               for r in P2._q_text_dup_ngram_spans(spark, td).collect()}
+               for r in dedup._q_text_dup_ngram_spans(spark, td).collect()}
     assert got == expect
     assert expect[5][1] == 0, "self-repetition must not count"
     assert 6 not in got

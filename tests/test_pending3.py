@@ -1,15 +1,15 @@
-"""Plan laws for the third pending tranche (oracle parity runs in
-test_pending_r05.py's parametrized sweep; these pin the SCALE-relevant
-plan shapes the docstrings claim)."""
+"""Plan laws for TPC-H and event query shapes (oracle parity runs in
+test_oracle_parity.py; these pin the SCALE-relevant plan shapes the
+docstrings claim)."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 
-from etl_dados_ibge_sp_spark import registry_pending3 as RP3
+from etl_dados_ibge_sp_spark.registry import all_queries
 
-QUERIES = {name: fn for name, _sql, fn in RP3.PENDING3}
+QUERIES = all_queries()
 
 
 def _plan(spark, df) -> str:

@@ -10,17 +10,12 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from etl_dados_ibge_sp_spark.registry_pending5 import (
-    _SEATS,
-    _q_basket_pair_support,
-    _q_benford_digit_audit,
-    _q_event_chisq_cells,
-    _q_events_interpolate_linear,
-    _q_max_concurrent_sessions,
-    _q_revenue_apportionment,
-    _q_rolling_corr_counts_7d,
-    _q_weighted_median_value,
-)
+from etl_dados_ibge_sp_spark.queries.analytics import (
+    _SEATS, _q_basket_pair_support, _q_benford_digit_audit,
+    _q_revenue_apportionment, _q_weighted_median_value)
+from etl_dados_ibge_sp_spark.queries.events import (
+    _q_event_chisq_cells, _q_events_interpolate_linear,
+    _q_max_concurrent_sessions, _q_rolling_corr_counts_7d)
 from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
 
 from pyspark.sql import functions as F

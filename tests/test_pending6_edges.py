@@ -12,16 +12,12 @@ import datetime
 
 import pytest
 
-from etl_dados_ibge_sp_spark.registry_pending6 import (
-    _q_conversion_within_7d,
-    _q_cusum_changepoint,
-    _q_dedup_containment,
-    _q_event_path_topk,
-    _q_fk_integrity_audit,
-    _q_ks_two_sample_sources,
-    _q_revenue_gini_nation,
-    _q_session_gap_stats,
-)
+from etl_dados_ibge_sp_spark.queries.analytics import (
+    _q_fk_integrity_audit, _q_ks_two_sample_sources, _q_revenue_gini_nation)
+from etl_dados_ibge_sp_spark.queries.dedup import _q_dedup_containment
+from etl_dados_ibge_sp_spark.queries.events import (
+    _q_conversion_within_7d, _q_cusum_changepoint, _q_event_path_topk,
+    _q_session_gap_stats)
 
 T0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
 

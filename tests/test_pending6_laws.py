@@ -15,24 +15,15 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from etl_dados_ibge_sp_spark.registry_pending6 import (
-    _CONTAIN_MAXDF,
-    _CONTAIN_TAU,
-    _KS_SRC_A,
-    _KS_SRC_B,
-    _PATH_STEPS,
-    _q_abc_classification,
-    _q_conversion_within_7d,
-    _q_cusum_changepoint,
-    _q_dedup_containment,
-    _q_event_path_topk,
-    _q_event_type_gini,
-    _q_fk_integrity_audit,
-    _q_hhi_supplier_concentration,
-    _q_ks_two_sample_sources,
-    _q_revenue_gini_nation,
-    _q_session_gap_stats,
-)
+from etl_dados_ibge_sp_spark.queries.analytics import (
+    _KS_SRC_A, _KS_SRC_B, _q_abc_classification, _q_fk_integrity_audit,
+    _q_hhi_supplier_concentration, _q_ks_two_sample_sources,
+    _q_revenue_gini_nation)
+from etl_dados_ibge_sp_spark.queries.dedup import (
+    _CONTAIN_MAXDF, _CONTAIN_TAU, _q_dedup_containment)
+from etl_dados_ibge_sp_spark.queries.events import (
+    _PATH_STEPS, _q_conversion_within_7d, _q_cusum_changepoint,
+    _q_event_path_topk, _q_event_type_gini, _q_session_gap_stats)
 from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
 
 

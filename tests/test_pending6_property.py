@@ -15,13 +15,11 @@ from collections import Counter, defaultdict
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from etl_dados_ibge_sp_spark.registry_pending6 import (
-    _q_abc_classification,
-    _q_cusum_changepoint,
-    _q_dedup_containment,
-    _q_ks_two_sample_sources,
-    _q_session_gap_stats,
-)
+from etl_dados_ibge_sp_spark.queries.analytics import (
+    _q_abc_classification, _q_ks_two_sample_sources)
+from etl_dados_ibge_sp_spark.queries.dedup import _q_dedup_containment
+from etl_dados_ibge_sp_spark.queries.events import (
+    _q_cusum_changepoint, _q_session_gap_stats)
 
 T0 = datetime.datetime(2024, 1, 1)
 _SET = dict(max_examples=6, deadline=None,

@@ -15,14 +15,9 @@ import pytest
 from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
-from etl_dados_ibge_sp_spark.registry_pending7 import (
-    _B,
-    _LOGIT,
-    _W,
-    _q_classifier_auc_exact,
-    _q_embed_score_logreg,
-    _q_score_calibration_bins,
-)
+from etl_dados_ibge_sp_spark.queries.embeddings import (
+    _B, _LOGIT, _W, _q_classifier_auc_exact, _q_embed_score_logreg,
+    _q_score_calibration_bins)
 from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
 
 

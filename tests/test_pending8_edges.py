@@ -12,10 +12,8 @@ import datetime
 
 import pytest
 
-from etl_dados_ibge_sp_spark.registry_pending8 import (
-    _q_attribution_touch_credit,
-    _q_seasonal_naive_error,
-)
+from etl_dados_ibge_sp_spark.queries.events import (
+    _q_attribution_touch_credit, _q_seasonal_naive_error)
 
 T0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
 

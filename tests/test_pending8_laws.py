@@ -17,16 +17,11 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from etl_dados_ibge_sp_spark.registry_pending8 import (
-    _BUCKET_DAYS,
-    _DAY_US,
-    _FD_CANDIDATES,
-    _q_attribution_touch_credit,
-    _q_fd_approx_audit,
-    _q_ltv_cohort_triangle,
-    _q_seasonal_naive_error,
-    _q_survival_second_order,
-)
+from etl_dados_ibge_sp_spark.queries.analytics import (
+    _FD_CANDIDATES, _q_fd_approx_audit, _q_ltv_cohort_triangle)
+from etl_dados_ibge_sp_spark.queries.events import (
+    _BUCKET_DAYS, _DAY_US, _q_attribution_touch_credit,
+    _q_seasonal_naive_error, _q_survival_second_order)
 from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
 
 from pyspark.sql import functions as F

@@ -1,62 +1,30 @@
-"""Round-gated pending queries (registry_pending.PENDING_GATED):
-oracle parity from the day they are written, plus the gate law — an
-entry must NOT admit before its earliest round even with slack, and
-MUST admit once the round arrives."""
+"""Oracle parity and registration wiring for the lakehouse-loop,
+vtable-sink, dataset-split, PNG-codec, governance, data-mix and
+numerics queries."""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_dados_ibge_sp_spark import registry_pending as RP
-from etl_dados_ibge_sp_spark.session import tune_for_oracle
+from .oracle_compare import assert_registered_matches_oracle, assert_wired
 
-from .oracle_compare import compare, duckdb_run
-
-GATED = {name: (minr, sql, fn) for minr, name, sql, fn in RP.PENDING_GATED}
+GATED = (
+    "bootstrap_poisson_revenue", "embed_covariance_scaled",
+    "epoch_mix_schedule", "epoch_repeat_budget",
+    "events_autocorr_daily", "gopher_rule_attribution",
+    "k_anonymity_audit", "l_diversity_audit",
+    "lakehouse_incremental_loop", "multimodal_decode_real",
+    "multimodal_png_roundtrip", "near_dup_rate_by_source",
+    "ngram_novelty", "qi_generalization_ladder", "quality_gopher_rules",
+    "quality_token_tradeoff", "source_datacard", "split_leakage_pairs",
+    "split_length_curriculum", "split_psi_drift",
+    "split_train_valid_test", "vtable_sink_roundtrip")
 
 
 @pytest.mark.parametrize("name", sorted(GATED))
 def test_gated_query_matches_oracle(name, spark, sf_dir):
-    _minr, sql, fn = GATED[name]
-    tune_for_oracle(spark)  # what admission's register() wrapper applies
-    df = fn(spark, sf_dir)
-    assert df.count() > 0, f"{name}: empty result is a weak test"
-    errors = compare(df, duckdb_run(sql, sf_dir), name=name)
-    assert not errors, "\n".join(errors)
-
-
-def test_gate_holds_until_round():
-    def fake_register(name, sql):
-        def deco(fn):
-            registry[name] = (sql, fn)
-            return fn
-        return deco
-
-    already = {name for name, _, _ in RP.PENDING}
-    for minr, name, _sql, _fn in RP.PENDING_GATED:
-        # Before the gate round (and with no round at all): not
-        # admitted, however much slack exists.
-        registry = dict.fromkeys(already)
-        RP.admit(registry, 999, fake_register)
-        assert name not in registry
-        registry = dict.fromkeys(already)
-        RP.admit(registry, 999, fake_register, current_round=minr - 1)
-        assert name not in registry
-        # At the gate round: admitted (given slack)...
-        registry = dict.fromkeys(already)
-        RP.admit(registry, 999, fake_register, current_round=minr)
-        assert name in registry
-        # ...but never without slack.
-        registry = dict.fromkeys(already)
-        RP.admit(registry, 0, fake_register, current_round=minr)
-        assert name not in registry
+    assert_registered_matches_oracle(name, spark, sf_dir)
 
 
 def test_gated_wiring():
-    names = [name for _minr, name, _sql, _fn in RP.PENDING_GATED]
-    assert len(names) == len(set(names))
-    assert not set(names) & {n for n, _, _ in RP.PENDING}
-    for minr, name, sql, fn in RP.PENDING_GATED:
-        assert isinstance(minr, int) and minr >= 7, name
-        assert isinstance(sql, str) and sql.strip(), f"{name}: no oracle"
-        assert callable(fn), f"{name}: fn not callable"
+    assert_wired(GATED)

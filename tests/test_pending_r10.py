@@ -1,43 +1,28 @@
-"""Round-10-gated tranche (dataset-split family): oracle parity from
-the day it is written, the non-degeneracy guards the driver's
-0-row-hash-match caveat requires, and the drain simulation proving
-the round-10 admission keeps the 5-round staleness bound."""
+"""Dataset-split and PNG-codec queries: oracle parity, the
+non-degeneracy guards the driver's 0-row-hash-match caveat requires,
+the split, leakage and novelty laws, and a rotation simulation showing
+that registering five queries in one round keeps the 5-round staleness
+bound."""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_dados_ibge_sp_spark import registry_pending as RP
-from etl_dados_ibge_sp_spark.registry_pending10 import PENDING10_GATED
+from etl_dados_ibge_sp_spark.registry import STALE_BOUND, all_queries
 
-from .oracle_compare import compare, duckdb_run
+from .oracle_compare import assert_registered_matches_oracle
+from .rotation_sim import simulate
 
-GATED10 = {name: (sql, fn) for _minr, name, sql, fn in PENDING10_GATED}
+QUERIES = all_queries()
 
-
-def test_tranche10_is_gated_to_round_10():
-    """The round-9 rotation is exactly budget-full (vocab_topk + 49 of
-    the r5 cohort), so these queries must not admit before round 10.
-    Round 10 widened the tranche in-round with the two PNG-codec
-    queries (same gate — round 10 is current, so they admit with the
-    split family as class-1 rows)."""
-    rounds = {name: minr for minr, name, _s, _f in PENDING10_GATED}
-    assert rounds == {"split_train_valid_test": 10,
-                      "ngram_novelty": 10,
-                      "split_leakage_pairs": 10,
-                      "multimodal_png_roundtrip": 10,
-                      "multimodal_decode_real": 10}
-    assert all(name in {n for _m, n, _s, _f in RP.PENDING_GATED}
-               for name in rounds)
+TRANCHE10 = (
+    "multimodal_decode_real", "multimodal_png_roundtrip",
+    "ngram_novelty", "split_leakage_pairs", "split_train_valid_test")
 
 
-@pytest.mark.parametrize("name", sorted(GATED10))
+@pytest.mark.parametrize("name", sorted(TRANCHE10))
 def test_gated10_query_matches_oracle(name, spark, sf_dir):
-    sql, fn = GATED10[name]
-    df = fn(spark, sf_dir)
-    assert df.count() > 0, f"{name}: empty result is a weak test"
-    errors = compare(df, duckdb_run(sql, sf_dir), name=name)
-    assert not errors, "\n".join(errors)
+    assert_registered_matches_oracle(name, spark, sf_dir)
 
 
 def test_split_is_total_deterministic_and_8_1_1ish(spark, sf_dir):
@@ -47,7 +32,7 @@ def test_split_is_total_deterministic_and_8_1_1ish(spark, sf_dir):
     within [half, double] of its nominal share — loose on purpose,
     the law is about gross skew (e.g. a modulus accidentally
     correlated with the id pattern), not sampling variance."""
-    _sql, fn = GATED10["split_train_valid_test"]
+    fn = QUERIES["split_train_valid_test"]
     rows = {r["split"]: r for r in fn(spark, sf_dir).collect()}
     assert set(rows) == {"train", "valid", "test"}
     n = sum(r["n_docs"] for r in rows.values())
@@ -66,7 +51,7 @@ def test_leakage_pairs_nondegenerate_and_consistent(spark, sf_dir):
     oracle comparison is vacuously green and the query must be
     re-fixtured.  Every reported pair straddles, orders doc_a < doc_b,
     and carries jaccard >= 0.8."""
-    _sql, fn = GATED10["split_leakage_pairs"]
+    fn = QUERIES["split_leakage_pairs"]
     rows = fn(spark, sf_dir).collect()
     assert len(rows) > 0
     for r in rows:
@@ -84,7 +69,7 @@ def test_leakage_lsh_candidates_subset_of_exact(spark, sf_dir):
     every pair (the planted near-dups sit far above the 0.8 band
     threshold, where P(miss) ≈ (1−J²)⁴ is negligible — and the hash
     is seedless md5, so this is a fixed outcome, not a flaky one)."""
-    from etl_dados_ibge_sp_spark.registry_pending10 import leakage_pairs
+    from etl_dados_ibge_sp_spark.queries._shared import leakage_pairs
 
     exact = {(r["doc_a"], r["doc_b"]):
              (r["split_a"], r["split_b"], r["jaccard"])
@@ -103,7 +88,7 @@ def test_leakage_lsh_candidates_subset_of_exact(spark, sf_dir):
 
 
 def test_leakage_unknown_strategy_raises(spark, sf_dir):
-    from etl_dados_ibge_sp_spark.registry_pending10 import leakage_pairs
+    from etl_dados_ibge_sp_spark.queries._shared import leakage_pairs
 
     with pytest.raises(ValueError, match="unknown candidate strategy"):
         leakage_pairs(spark, sf_dir, candidates="bogus")
@@ -112,7 +97,7 @@ def test_leakage_unknown_strategy_raises(spark, sf_dir):
 def test_novelty_bounds_and_batch_scope(spark, sf_dir):
     """novelty ∈ [0, 1], n_novel <= n_grams, and only arrival-batch
     docs (doc_id % 7 == 0, >= 3 tokens) appear."""
-    _sql, fn = GATED10["ngram_novelty"]
+    fn = QUERIES["ngram_novelty"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -122,16 +107,12 @@ def test_novelty_bounds_and_batch_scope(spark, sf_dir):
 
 
 def test_round10_admission_holds_5_round_bound():
-    """Forward-simulate the REAL post-round-9 state: cohorts green in
-    r5(1 straggler)/r6(50)/r7(50)/r8(50)/r9(50), the three gated
-    queries unlocking at round 10 into slack 5*50-201=49.  They must
-    admit in r10, get driver rows immediately (class 1 outranks the
-    steady-state cohort), and no verified query may ever exceed the
-    5-round staleness bound — the displaced rows bubble as class 0,
-    exactly like the round-7 extension did."""
-    from etl_dados_ibge_sp_spark.registry import _order, _stale_bound
-
-    BUDGET = RP.DRIVER_ROW_BUDGET
+    """Forward-simulate the post-round-9 state: cohorts green in
+    r5(1 straggler)/r6(50)/r7(50)/r8(50)/r9(50), and five queries
+    registered in round 10 (N = 206).  They must get driver rows
+    immediately (class 1 outranks the steady-state cohort), and no
+    verified query may ever exceed the 5-round staleness bound — the
+    displaced rows bubble up as class 0."""
     names = (["e0"]                                    # r5 straggler
              + [f"f{i}" for i in range(50)]            # r6 cohort
              + [f"g{i}" for i in range(50)]            # r7
@@ -142,29 +123,11 @@ def test_round10_admission_holds_5_round_bound():
                   | {f"g{i}": 7 for i in range(50)}
                   | {f"h{i}": 8 for i in range(50)}
                   | {f"i{i}": 9 for i in range(50)})
-    gated = [(10, n)
-             for n in ("t10a", "t10b", "t10c", "t10d", "t10e")]
-
-    cur, max_gap = 10, 0
-    first_green: dict[str, int] = {}
-    for _ in range(12):  # rounds 10..21 — two+ rotation periods
-        slack = max(0, _stale_bound(cur) * BUDGET - len(names))
-        for minr, q in list(gated):
-            if cur >= minr and slack > 0:
-                names.append(q)
-                gated.remove((minr, q))
-                slack -= 1
-        checked = _order(names, last_green, cur)[:BUDGET]
-        for n in names:
-            g = last_green.get(n)
-            if g is not None and n not in checked:
-                max_gap = max(max_gap, cur - g)
-        for n in checked:
-            last_green[n] = cur
-            first_green.setdefault(n, cur)
-        cur += 1
-
-    assert not gated, "a gated query never admitted"
-    for q in ("t10a", "t10b", "t10c", "t10d", "t10e"):
-        assert first_green[q] == 10
-    assert max_gap <= 5, f"bound broken: a query went {max_gap} rounds"
+    first_green, max_gap = simulate(
+        names, last_green,
+        {10: [f"t10{c}" for c in "abcde"]},
+        start=10, rounds=12)
+    for c in "abcde":
+        assert first_green[f"t10{c}"] == 10
+    assert max_gap <= STALE_BOUND, \
+        f"bound broken: a query went {max_gap} rounds"

@@ -1,8 +1,7 @@
-"""Round-11-gated tranche (dataset-governance family): oracle parity
-from the day it is written, non-degeneracy guards (the driver's
-0-row-hash-match caveat), independent-reimplementation laws for the
-two numeric audits, and the drain simulation proving the round-11
-admission keeps the 5-round staleness bound."""
+"""Dataset-governance queries: oracle parity, non-degeneracy guards
+(the driver's 0-row-hash-match caveat), independent-reimplementation
+laws for the two numeric audits, and the rotation simulation for their
+registration round."""
 
 from __future__ import annotations
 
@@ -10,35 +9,21 @@ import math
 
 import pytest
 
-from etl_dados_ibge_sp_spark import registry_pending as RP
-from etl_dados_ibge_sp_spark.registry_pending11 import PENDING11_GATED
+from etl_dados_ibge_sp_spark.registry import STALE_BOUND, all_queries
 
-from .oracle_compare import compare, duckdb_run
+from .oracle_compare import assert_registered_matches_oracle
+from .rotation_sim import simulate
 
-GATED11 = {name: (sql, fn) for _minr, name, sql, fn in PENDING11_GATED}
+QUERIES = all_queries()
 
-
-def test_tranche11_is_gated_to_round_11():
-    """The round-10 budget already carries the five split/PNG
-    admissions, so the governance family must not admit before
-    round 11."""
-    rounds = {name: minr for minr, name, _s, _f in PENDING11_GATED}
-    assert rounds == {"quality_gopher_rules": 11,
-                      "split_psi_drift": 11,
-                      "k_anonymity_audit": 11,
-                      "near_dup_rate_by_source": 11,
-                      "split_length_curriculum": 11}
-    assert all(name in {n for _m, n, _s, _f in RP.PENDING_GATED}
-               for name in rounds)
+TRANCHE11 = (
+    "k_anonymity_audit", "near_dup_rate_by_source",
+    "quality_gopher_rules", "split_length_curriculum", "split_psi_drift")
 
 
-@pytest.mark.parametrize("name", sorted(GATED11))
+@pytest.mark.parametrize("name", sorted(TRANCHE11))
 def test_gated11_query_matches_oracle(name, spark, sf_dir):
-    sql, fn = GATED11[name]
-    df = fn(spark, sf_dir)
-    assert df.count() > 0, f"{name}: empty result is a weak test"
-    errors = compare(df, duckdb_run(sql, sf_dir), name=name)
-    assert not errors, "\n".join(errors)
+    assert_registered_matches_oracle(name, spark, sf_dir)
 
 
 def test_gopher_rules_exact_and_nondegenerate(spark, sf_dir):
@@ -48,7 +33,7 @@ def test_gopher_rules_exact_and_nondegenerate(spark, sf_dir):
     ratios); and the fixture corpus must split on the filter — an
     all-pass or all-fail corpus would make the oracle comparison
     vacuous on the interesting column."""
-    _sql, fn = GATED11["quality_gopher_rules"]
+    fn = QUERIES["quality_gopher_rules"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     n_pass = sum(r["passes"] for r in rows)
@@ -74,7 +59,7 @@ def test_psi_matches_independent_reimplementation(spark, sf_dir):
     arithmetic reimplementation."""
     from pyspark.sql import functions as F
 
-    from etl_dados_ibge_sp_spark.registry_pending10 import _split_col
+    from etl_dados_ibge_sp_spark.queries._shared import _split_col
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -96,7 +81,7 @@ def test_psi_matches_independent_reimplementation(spark, sf_dir):
             * math.log(share("train", b) / share(s, b))
             for b in range(10))
 
-    _sql, fn = GATED11["split_psi_drift"]
+    fn = QUERIES["split_psi_drift"]
     got = {r["split"]: (r["n_docs"], r["psi"])
            for r in fn(spark, sf_dir).collect()}
     assert set(got) == {"valid", "test"}
@@ -110,7 +95,7 @@ def test_psi_matches_independent_reimplementation(spark, sf_dir):
 def test_k_anonymity_partitions_the_corpus(spark, sf_dir):
     """Every document lands in exactly one class-size bucket, and the
     reported min/max class sizes respect their bucket's bounds."""
-    _sql, fn = GATED11["k_anonymity_audit"]
+    fn = QUERIES["k_anonymity_audit"]
     rows = {r["size_class"]: r for r in fn(spark, sf_dir).collect()}
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
     n = load_table(spark, sf_dir, "documents").count()
@@ -128,7 +113,7 @@ def test_near_dup_census_consistent_and_nondegenerate(spark, sf_dir):
     near-dups must make the census non-zero somewhere (else the
     interesting column is vacuously hash-green); and no source can
     report more near-dup docs than docs."""
-    _sql, fn = GATED11["near_dup_rate_by_source"]
+    fn = QUERIES["near_dup_rate_by_source"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     assert sum(r["n_near_dup"] for r in rows) > 0
@@ -141,7 +126,7 @@ def test_near_dup_census_consistent_and_nondegenerate(spark, sf_dir):
 def test_curriculum_partitions_the_corpus(spark, sf_dir):
     """(split, len_bin) cells partition the corpus: doc counts sum to
     the table size and every cell's token mass is positive."""
-    _sql, fn = GATED11["split_length_curriculum"]
+    fn = QUERIES["split_length_curriculum"]
     rows = fn(spark, sf_dir).collect()
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
     n = load_table(spark, sf_dir, "documents").count()
@@ -153,51 +138,26 @@ def test_curriculum_partitions_the_corpus(spark, sf_dir):
 
 
 def test_round11_admission_holds_5_round_bound():
-    """Forward-simulate the REAL post-round-10 state: cohorts green in
-    r6..r9 (the r5 straggler and tranche-10's five queries re-verified
-    in r10 alongside 44 stale rows), tranche 11's five queries
-    unlocking at round 11 into slack 5*50-211=39.  They must admit in
-    r11, get driver rows immediately (class 1 outranks the
-    steady-state cohort), and no verified query may ever exceed the
-    5-round staleness bound."""
-    from etl_dados_ibge_sp_spark.registry import _order, _stale_bound
-
-    BUDGET = RP.DRIVER_ROW_BUDGET
-    # State entering round 10: 201 union-green + 5 tranche-10 gated.
-    names = (["e0"]
-             + [f"f{i}" for i in range(50)]
-             + [f"g{i}" for i in range(50)]
-             + [f"h{i}" for i in range(50)]
-             + [f"i{i}" for i in range(50)])
+    """The round-10 simulation with five more queries registered in
+    round 11 (N = 211): each group gets driver rows in the round it
+    arrives, and no verified query exceeds the 5-round bound."""
+    names = (["e0"]                                    # r5 straggler
+             + [f"f{i}" for i in range(50)]            # r6 cohort
+             + [f"g{i}" for i in range(50)]            # r7
+             + [f"h{i}" for i in range(50)]            # r8
+             + [f"i{i}" for i in range(50)])           # r9
     last_green = ({"e0": 5}
                   | {f"f{i}": 6 for i in range(50)}
                   | {f"g{i}": 7 for i in range(50)}
                   | {f"h{i}": 8 for i in range(50)}
                   | {f"i{i}": 9 for i in range(50)})
-    gated = ([(10, f"t10{c}") for c in "abcde"]
-             + [(11, f"t11{c}") for c in "abcde"])
-
-    cur, max_gap = 10, 0
-    first_green: dict[str, int] = {}
-    for _ in range(12):  # rounds 10..21 — two+ rotation periods
-        slack = max(0, _stale_bound(cur) * BUDGET - len(names))
-        for minr, q in list(gated):
-            if cur >= minr and slack > 0:
-                names.append(q)
-                gated.remove((minr, q))
-                slack -= 1
-        checked = _order(names, last_green, cur)[:BUDGET]
-        for n in names:
-            g = last_green.get(n)
-            if g is not None and n not in checked:
-                max_gap = max(max_gap, cur - g)
-        for n in checked:
-            last_green[n] = cur
-            first_green.setdefault(n, cur)
-        cur += 1
-
-    assert not gated, "a gated query never admitted"
+    first_green, max_gap = simulate(
+        names, last_green,
+        {10: [f"t10{c}" for c in "abcde"],
+         11: [f"t11{c}" for c in "abcde"]},
+        start=10, rounds=12)
     for c in "abcde":
         assert first_green[f"t10{c}"] == 10
         assert first_green[f"t11{c}"] == 11
-    assert max_gap <= 5, f"bound broken: a query went {max_gap} rounds"
+    assert max_gap <= STALE_BOUND, \
+        f"bound broken: a query went {max_gap} rounds"

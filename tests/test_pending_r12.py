@@ -1,43 +1,27 @@
-"""Round-12-gated tranche (data-mix-engineering family): oracle
-parity from the day it is written, non-degeneracy guards (the
-driver's 0-row-hash-match caveat), arithmetic-identity and
-cross-query consistency laws, and the drain simulation proving the
-round-12 admission keeps the 5-round staleness bound."""
+"""Data-mix-engineering queries: oracle parity, non-degeneracy guards
+(the driver's 0-row-hash-match caveat), arithmetic-identity and
+cross-query consistency laws, plan-shape pins, and the rotation
+simulation for their registration round."""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_dados_ibge_sp_spark import registry_pending as RP
-from etl_dados_ibge_sp_spark.registry_pending11 import PENDING11_GATED
-from etl_dados_ibge_sp_spark.registry_pending12 import PENDING12_GATED
+from etl_dados_ibge_sp_spark.registry import STALE_BOUND, all_queries
 
-from .oracle_compare import compare, duckdb_run
+from .oracle_compare import assert_registered_matches_oracle
+from .rotation_sim import simulate
 
-GATED12 = {name: (sql, fn) for _minr, name, sql, fn in PENDING12_GATED}
-GATED11 = {name: (sql, fn) for _minr, name, sql, fn in PENDING11_GATED}
+QUERIES = all_queries()
 
-
-def test_tranche12_is_gated_to_round_12():
-    """The round-11 budget carries the five governance admissions, so
-    the mix-engineering family must not admit before round 12."""
-    rounds = {name: minr for minr, name, _s, _f in PENDING12_GATED}
-    assert rounds == {"epoch_repeat_budget": 12,
-                      "gopher_rule_attribution": 12,
-                      "l_diversity_audit": 12,
-                      "source_datacard": 12,
-                      "quality_token_tradeoff": 12}
-    assert all(name in {n for _m, n, _s, _f in RP.PENDING_GATED}
-               for name in rounds)
+TRANCHE12 = (
+    "epoch_repeat_budget", "gopher_rule_attribution",
+    "l_diversity_audit", "quality_token_tradeoff", "source_datacard")
 
 
-@pytest.mark.parametrize("name", sorted(GATED12))
+@pytest.mark.parametrize("name", sorted(TRANCHE12))
 def test_gated12_query_matches_oracle(name, spark, sf_dir):
-    sql, fn = GATED12[name]
-    df = fn(spark, sf_dir)
-    assert df.count() > 0, f"{name}: empty result is a weak test"
-    errors = compare(df, duckdb_run(sql, sf_dir), name=name)
-    assert not errors, "\n".join(errors)
+    assert_registered_matches_oracle(name, spark, sf_dir)
 
 
 def test_epoch_budget_arithmetic_identities(spark, sf_dir):
@@ -45,7 +29,7 @@ def test_epoch_budget_arithmetic_identities(spark, sf_dir):
     (stored_tokens, unique_tokens) — recompute all of them in Python
     and require equality; plus the structural bounds (unique <= stored,
     epochs >= 2 because alloc = 2x stored >= 2x unique)."""
-    _sql, fn = GATED12["epoch_repeat_budget"]
+    fn = QUERIES["epoch_repeat_budget"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -77,7 +61,7 @@ def test_epoch_budget_masses_match_direct_scan(spark, sf_dir):
         .groupBy("source")
         .agg(F.sum(T.token_count(F.col("text"))).cast("bigint")
              .alias("s"))).collect()}
-    _sql, fn = GATED12["epoch_repeat_budget"]
+    fn = QUERIES["epoch_repeat_budget"]
     got = {r["source"]: r["stored_tokens"]
            for r in fn(spark, sf_dir).collect()}
     assert got == direct
@@ -88,7 +72,7 @@ def test_rule_attribution_matches_per_doc_verdicts(spark, sf_dir):
     verdict frame in plain Python: n_fail and n_fail_exclusive per
     rule must agree exactly (the two queries share thresholds by
     construction — this law catches a drift in either)."""
-    _sql11, fn11 = GATED11["quality_gopher_rules"]
+    fn11 = QUERIES["quality_gopher_rules"]
     docs = fn11(spark, sf_dir).collect()
     bits = [(r["r_words"], r["r_wordlen"], r["r_alpha"], r["r_stop"])
             for r in docs]
@@ -100,7 +84,7 @@ def test_rule_attribution_matches_per_doc_verdicts(spark, sf_dir):
                      * b[(i + 3) % 4] for b in bits)
         expect[rule] = (n_fail, n_excl)
 
-    _sql, fn = GATED12["gopher_rule_attribution"]
+    fn = QUERIES["gopher_rule_attribution"]
     got = {r["rule"]: (r["n_fail"], r["n_fail_exclusive"])
            for r in fn(spark, sf_dir).collect()}
     assert got == expect
@@ -117,7 +101,7 @@ def test_l_diversity_partitions_the_corpus(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()
     n_langs = docs.select("lang").distinct().count()
-    _sql, fn = GATED12["l_diversity_audit"]
+    fn = QUERIES["l_diversity_audit"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     assert sum(r["n_docs"] for r in rows) == n
@@ -132,10 +116,10 @@ def test_datacard_consistent_with_epoch_budget(spark, sf_dir):
     """The datacard's token masses are the budget query's stored
     masses; shares sum to 1 within rounding; dup-rate and mean are
     exact functions of the row's own integers."""
-    _sql, fn = GATED12["source_datacard"]
+    fn = QUERIES["source_datacard"]
     cards = fn(spark, sf_dir).collect()
     assert cards
-    _sqlb, fnb = GATED12["epoch_repeat_budget"]
+    fnb = QUERIES["epoch_repeat_budget"]
     budget = {r["source"]: r for r in fnb(spark, sf_dir).collect()}
     assert {c["source"] for c in cards} == set(budget)
     share_sum = 0.0
@@ -156,7 +140,7 @@ def test_tradeoff_frontier_laws(spark, sf_dir):
     the best grade down (worst grade's cum equals the corpus total);
     cum_share ends at exactly 1.0; and the histogram matches the
     per-document verdict frame."""
-    _sql11, fn11 = GATED11["quality_gopher_rules"]
+    fn11 = QUERIES["quality_gopher_rules"]
     verdicts = fn11(spark, sf_dir).collect()
     from collections import Counter
     hist = Counter(r["r_words"] + r["r_wordlen"] + r["r_alpha"]
@@ -166,7 +150,7 @@ def test_tradeoff_frontier_laws(spark, sf_dir):
         mass[r["r_words"] + r["r_wordlen"] + r["r_alpha"]
              + r["r_stop"]] += r["n_tok"]
 
-    _sql, fn = GATED12["quality_token_tradeoff"]
+    fn = QUERIES["quality_token_tradeoff"]
     rows = sorted(fn(spark, sf_dir).collect(),
                   key=lambda r: -r["grade"])
     assert {r["grade"] for r in rows} == set(hist)
@@ -179,63 +163,6 @@ def test_tradeoff_frontier_laws(spark, sf_dir):
     total = sum(mass.values())
     assert rows[-1]["cum_tokens"] == total
     assert abs(rows[-1]["cum_share"] - 1.0) <= 1e-9
-
-
-def test_round12_admission_holds_5_round_bound():
-    """Forward-simulate the post-round-11 state: the synthetic cohort
-    history of test_pending_r11 advanced one round (tranche 11's five
-    queries green in r11), tranche 12's five unlocking at round 12
-    into slack 5*50-216=34.  They must admit in r12, get driver rows
-    immediately (class 1 outranks the steady-state cohort), and no
-    verified query may ever exceed the 5-round staleness bound."""
-    from etl_dados_ibge_sp_spark.registry import _order, _stale_bound
-
-    BUDGET = RP.DRIVER_ROW_BUDGET
-    # State entering round 11: 206 union-green + 5 tranche-11 gated.
-    # Round 10's budget (per the test_pending_r11 simulation of the
-    # real history) re-verified e0, the five tranche-10 queries, and
-    # 44 of the r6 cohort — the remaining 6 of that cohort are the
-    # round-11 class-0 front.
-    names = (["e0"]
-             + [f"f{i}" for i in range(50)]
-             + [f"g{i}" for i in range(50)]
-             + [f"h{i}" for i in range(50)]
-             + [f"i{i}" for i in range(50)]
-             + [f"t10{c}" for c in "abcde"])
-    last_green = ({"e0": 10}
-                  | {f"f{i}": 10 for i in range(44)}
-                  | {f"f{i}": 6 for i in range(44, 50)}
-                  | {f"g{i}": 7 for i in range(50)}
-                  | {f"h{i}": 8 for i in range(50)}
-                  | {f"i{i}": 9 for i in range(50)}
-                  | {f"t10{c}": 10 for c in "abcde"})
-    gated = ([(11, f"t11{c}") for c in "abcde"]
-             + [(12, f"t12{c}") for c in "abcde"])
-
-    cur, max_gap = 11, 0
-    first_green: dict[str, int] = {}
-    for _ in range(12):  # rounds 11..22 — two+ rotation periods
-        slack = max(0, _stale_bound(cur) * BUDGET - len(names))
-        for minr, q in list(gated):
-            if cur >= minr and slack > 0:
-                names.append(q)
-                gated.remove((minr, q))
-                slack -= 1
-        checked = _order(names, last_green, cur)[:BUDGET]
-        for n in names:
-            g = last_green.get(n)
-            if g is not None and n not in checked:
-                max_gap = max(max_gap, cur - g)
-        for n in checked:
-            last_green[n] = cur
-            first_green.setdefault(n, cur)
-        cur += 1
-
-    assert not gated, "a gated query never admitted"
-    for c in "abcde":
-        assert first_green[f"t11{c}"] == 11
-        assert first_green[f"t12{c}"] == 12
-    assert max_gap <= 5, f"bound broken: a query went {max_gap} rounds"
 
 
 @pytest.mark.parametrize("name,max_shuffles", [
@@ -254,7 +181,7 @@ def test_tranche12_plan_shape(name, max_shuffles, spark, sf_dir):
     (scan fan-out + the pinned aggregation levels)."""
     import re
 
-    _sql, fn = GATED12[name]
+    fn = QUERIES[name]
     plan = fn(spark, sf_dir)._jdf.queryExecution() \
         .executedPlan().toString()
     assert plan.count("Scan parquet") == 1, \
@@ -266,3 +193,37 @@ def test_tranche12_plan_shape(name, max_shuffles, spark, sf_dir):
     n_shuffles = len(re.findall(r"\bExchange (hash|range|Single)", plan))
     assert n_shuffles <= max_shuffles, \
         f"{name}: {n_shuffles} shuffles > pinned {max_shuffles}"
+
+
+def test_round12_admission_holds_5_round_bound():
+    """Forward-simulate the post-round-10 state (the round-11
+    simulation advanced one round) with five queries registered in
+    round 11 and five in round 12 (N = 216): each group gets driver
+    rows in the round it arrives, and no verified query exceeds the
+    5-round bound."""
+    # Round 10's budget re-verified e0, the five tranche-10 queries
+    # and 44 of the r6 cohort; the other 6 of that cohort are the
+    # round-11 class-0 front.
+    names = (["e0"]
+             + [f"f{i}" for i in range(50)]
+             + [f"g{i}" for i in range(50)]
+             + [f"h{i}" for i in range(50)]
+             + [f"i{i}" for i in range(50)]
+             + [f"t10{c}" for c in "abcde"])
+    last_green = ({"e0": 10}
+                  | {f"f{i}": 10 for i in range(44)}
+                  | {f"f{i}": 6 for i in range(44, 50)}
+                  | {f"g{i}": 7 for i in range(50)}
+                  | {f"h{i}": 8 for i in range(50)}
+                  | {f"i{i}": 9 for i in range(50)}
+                  | {f"t10{c}": 10 for c in "abcde"})
+    first_green, max_gap = simulate(
+        names, last_green,
+        {11: [f"t11{c}" for c in "abcde"],
+         12: [f"t12{c}" for c in "abcde"]},
+        start=11, rounds=12)
+    for c in "abcde":
+        assert first_green[f"t11{c}"] == 11
+        assert first_green[f"t12{c}"] == 12
+    assert max_gap <= STALE_BOUND, \
+        f"bound broken: a query went {max_gap} rounds"

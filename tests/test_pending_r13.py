@@ -1,9 +1,8 @@
-"""Round-13-gated tranche (numerics family): oracle parity from the
-day it is written, independent pure-Python reimplementation laws for
-every exact-arithmetic claim (a bug shared by the Spark plan and the
-SQL string survives the hash compare but not an arithmetic
-recomputation), plan-shape pins, and the drain simulation proving the
-round-13 admission keeps the 5-round staleness bound."""
+"""Numerics queries: oracle parity, independent pure-Python
+reimplementation laws for every exact-arithmetic claim (a bug shared by
+the Spark plan and the SQL string survives the hash compare but not an
+arithmetic recomputation), plan-shape pins, and the rotation simulation
+for their registration round."""
 
 from __future__ import annotations
 
@@ -12,38 +11,24 @@ import math
 
 import pytest
 
-from etl_dados_ibge_sp_spark import registry_pending as RP
-from etl_dados_ibge_sp_spark.registry_pending12 import PENDING12_GATED
-from etl_dados_ibge_sp_spark.registry_pending13 import (
-    _B, _POISSON_CDF, _RING, _SCALE, PENDING13_GATED)
+from etl_dados_ibge_sp_spark.queries.analytics import _B, _POISSON_CDF, _RING
+from etl_dados_ibge_sp_spark.queries.embeddings import _SCALE
+from etl_dados_ibge_sp_spark.registry import STALE_BOUND, all_queries
 
-from .oracle_compare import compare, duckdb_run
+from .oracle_compare import assert_registered_matches_oracle
+from .rotation_sim import simulate
 
-GATED13 = {name: (sql, fn) for _minr, name, sql, fn in PENDING13_GATED}
-GATED12 = {name: (sql, fn) for _minr, name, sql, fn in PENDING12_GATED}
+QUERIES = all_queries()
 
-
-def test_tranche13_is_gated_to_round_13():
-    """One tranche unlocks per round: tranche 12 owns round 12's
-    admission slack, so the numerics family must not admit before
-    round 13."""
-    rounds = {name: minr for minr, name, _s, _f in PENDING13_GATED}
-    assert rounds == {"embed_covariance_scaled": 13,
-                      "events_autocorr_daily": 13,
-                      "bootstrap_poisson_revenue": 13,
-                      "epoch_mix_schedule": 13,
-                      "qi_generalization_ladder": 13}
-    assert all(name in {n for _m, n, _s, _f in RP.PENDING_GATED}
-               for name in rounds)
+TRANCHE13 = (
+    "bootstrap_poisson_revenue", "embed_covariance_scaled",
+    "epoch_mix_schedule", "events_autocorr_daily",
+    "qi_generalization_ladder")
 
 
-@pytest.mark.parametrize("name", sorted(GATED13))
+@pytest.mark.parametrize("name", sorted(TRANCHE13))
 def test_gated13_query_matches_oracle(name, spark, sf_dir):
-    sql, fn = GATED13[name]
-    df = fn(spark, sf_dir)
-    assert df.count() > 0, f"{name}: empty result is a weak test"
-    errors = compare(df, duckdb_run(sql, sf_dir), name=name)
-    assert not errors, "\n".join(errors)
+    assert_registered_matches_oracle(name, spark, sf_dir)
 
 
 def _embeddings_scaled(sf_dir):
@@ -72,7 +57,7 @@ def test_covariance_matches_pure_python(spark, sf_dir):
         sij = sum(v[i] * v[j] for v in vecs)
         return round((n * sij - si * sj) / n / (n - 1) / 1.0e12, 9)
 
-    _sql, fn = GATED13["embed_covariance_scaled"]
+    fn = QUERIES["embed_covariance_scaled"]
     rows = {(r["i"], r["j"]): r for r in fn(spark, sf_dir).collect()}
     assert len(rows) == 64 * 65 // 2
     for i, j in ((0, 0), (3, 17), (63, 63)):
@@ -107,7 +92,7 @@ def test_autocorr_matches_pure_python(spark, sf_dir):
         den = n * (n * q - s * s)
         expect[k] = (n, p, round(num / den, 6))
 
-    _sql, fn = GATED13["events_autocorr_daily"]
+    fn = QUERIES["events_autocorr_daily"]
     got = {r["k"]: (r["n_days"], r["n_pairs"], r["autocorr"])
            for r in fn(spark, sf_dir).collect()}
     assert got == expect
@@ -143,7 +128,7 @@ def test_bootstrap_matches_pure_python_and_is_calibrated(spark, sf_dir):
     n = len(orders)
     expect7 = sum(_poisson_weight_py(k, 7) * m for k, m in orders)
 
-    _sql, fn = GATED13["bootstrap_poisson_revenue"]
+    fn = QUERIES["bootstrap_poisson_revenue"]
     rows = {r["resample_id"]: r for r in fn(spark, sf_dir).collect()}
     assert len(rows) == _B
     assert rows[7]["total_cents"] == expect7
@@ -161,9 +146,9 @@ def test_schedule_sums_to_budget_and_is_monotone(spark, sf_dir):
     """Per source: 4 epoch rows, non-increasing token series, epoch 1
     serves min(unique, alloc), and the series sums exactly to the
     budget query's tokens_served."""
-    _sqlb, fnb = GATED12["epoch_repeat_budget"]
+    fnb = QUERIES["epoch_repeat_budget"]
     budget = {r["source"]: r for r in fnb(spark, sf_dir).collect()}
-    _sql, fn = GATED13["epoch_mix_schedule"]
+    fn = QUERIES["epoch_mix_schedule"]
     rows = fn(spark, sf_dir).collect()
     by_src: dict[str, dict[int, int]] = {}
     for r in rows:
@@ -188,7 +173,7 @@ def test_ladder_is_a_coarsening_chain(spark, sf_dir):
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
 
     n = load_table(spark, sf_dir, "documents").count()
-    _sql, fn = GATED13["qi_generalization_ladder"]
+    fn = QUERIES["qi_generalization_ladder"]
     rows = sorted(fn(spark, sf_dir).collect(), key=lambda r: r["level"])
     assert [r["level"] for r in rows] == [0, 1, 2, 3]
     for a, b in zip(rows, rows[1:]):
@@ -224,7 +209,7 @@ def test_tranche13_plan_shape(name, max_shuffles, n_scans, spark,
     import re
 
     spark.catalog.clearCache()
-    _sql, fn = GATED13[name]
+    fn = QUERIES[name]
     df = fn(spark, sf_dir)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -240,12 +225,13 @@ def test_tranche13_plan_shape(name, max_shuffles, n_scans, spark,
 
 
 def test_round13_admission_holds_5_round_bound():
-    """The test_pending_r12 simulation advanced one tranche: tranche
-    13's five queries unlock at round 13 into slack 5*50-221=29, admit
-    immediately, and the 5-round staleness bound never breaks."""
-    from etl_dados_ibge_sp_spark.registry import _order, _stale_bound
-
-    BUDGET = RP.DRIVER_ROW_BUDGET
+    """The round-12 simulation with five more queries registered in
+    round 13 (N = 221, today's registry size): each group gets driver
+    rows in the round it arrives, and no verified query exceeds the
+    5-round bound."""
+    # Round 10's budget re-verified e0, the five tranche-10 queries
+    # and 44 of the r6 cohort; the other 6 of that cohort are the
+    # round-11 class-0 front.
     names = (["e0"]
              + [f"f{i}" for i in range(50)]
              + [f"g{i}" for i in range(50)]
@@ -259,35 +245,18 @@ def test_round13_admission_holds_5_round_bound():
                   | {f"h{i}": 8 for i in range(50)}
                   | {f"i{i}": 9 for i in range(50)}
                   | {f"t10{c}": 10 for c in "abcde"})
-    gated = ([(11, f"t11{c}") for c in "abcde"]
-             + [(12, f"t12{c}") for c in "abcde"]
-             + [(13, f"t13{c}") for c in "abcde"])
-
-    cur, max_gap = 11, 0
-    first_green: dict[str, int] = {}
-    for _ in range(12):  # rounds 11..22
-        slack = max(0, _stale_bound(cur) * BUDGET - len(names))
-        for minr, q in list(gated):
-            if cur >= minr and slack > 0:
-                names.append(q)
-                gated.remove((minr, q))
-                slack -= 1
-        checked = _order(names, last_green, cur)[:BUDGET]
-        for nm in names:
-            g = last_green.get(nm)
-            if g is not None and nm not in checked:
-                max_gap = max(max_gap, cur - g)
-        for nm in checked:
-            last_green[nm] = cur
-            first_green.setdefault(nm, cur)
-        cur += 1
-
-    assert not gated, "a gated query never admitted"
+    first_green, max_gap = simulate(
+        names, last_green,
+        {11: [f"t11{c}" for c in "abcde"],
+         12: [f"t12{c}" for c in "abcde"],
+         13: [f"t13{c}" for c in "abcde"]},
+        start=11, rounds=12)
     for c in "abcde":
         assert first_green[f"t11{c}"] == 11
         assert first_green[f"t12{c}"] == 12
         assert first_green[f"t13{c}"] == 13
-    assert max_gap <= 5, f"bound broken: a query went {max_gap} rounds"
+    assert max_gap <= STALE_BOUND, \
+        f"bound broken: a query went {max_gap} rounds"
 
 
 from hypothesis import given, settings  # noqa: E402

@@ -128,8 +128,8 @@ def test_batch_ann_agrees_with_single_query_path(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from etl_dados_ibge_sp_spark.operators import similarity as S
-    from etl_dados_ibge_sp_spark.registry_ext import (_ivf_model,
-                                                      planted_clusters)
+    from etl_dados_ibge_sp_spark.queries._shared import (
+        _ivf_model, planted_clusters)
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
 
     corpus, cents = _ivf_model(spark, sf_dir)

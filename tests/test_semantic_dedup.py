@@ -253,7 +253,7 @@ def test_auto_k_is_default_and_result_identical_to_fixed(spark):
 
     from etl_dados_ibge_sp_spark.operators.similarity import (
         auto_semdedup_k, semantic_dedup)
-    from etl_dados_ibge_sp_spark.registry_ext import planted_clusters
+    from etl_dados_ibge_sp_spark.queries._shared import planted_clusters
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
     from pyspark.sql import functions as F
 
@@ -305,7 +305,7 @@ def test_exact_duplicate_verdicts_k_invariant(spark):
     pairs share a cell — that recall trade is the documented
     n_probe/k design space, not a correctness drift.)"""
     from etl_dados_ibge_sp_spark.operators.similarity import kmeans_fit
-    from etl_dados_ibge_sp_spark.registry_ext import planted_clusters
+    from etl_dados_ibge_sp_spark.queries._shared import planted_clusters
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
     from pyspark.sql import functions as F
 
@@ -338,7 +338,7 @@ def test_sampled_fit_deterministic_and_result_identical(spark):
     law exercises real sampling, not the small-corpus fallback."""
     from etl_dados_ibge_sp_spark.operators.similarity import (
         kmeans_fit, kmeans_fit_sampled, semantic_dedup)
-    from etl_dados_ibge_sp_spark.registry_ext import planted_clusters
+    from etl_dados_ibge_sp_spark.queries._shared import planted_clusters
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
     from pyspark.sql import functions as F
 

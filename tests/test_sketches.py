@@ -3,7 +3,7 @@ oracle-parity rows cannot express: accuracy bounds, merge algebra,
 the bounded-state prefilter's safety, Bloom's no-false-negative /
 low-false-positive guarantees, and the Q21 decorrelation plan shape.
 Value-level parity (hashes, order statistics, counters, estimates vs
-DuckDB) runs in tests/test_pending_r05.py like every pending query."""
+DuckDB) runs in tests/test_oracle_parity.py like every query."""
 
 from __future__ import annotations
 
@@ -191,8 +191,7 @@ def test_sole_returned_supplier_decorrelates(spark, sf_dir):
     """The Q21 shape's correlated EXISTS / NOT EXISTS must decorrelate
     to semi/anti self-joins — no per-row Subquery node survives in the
     physical plan."""
-    from etl_dados_ibge_sp_spark.registry_pending4 import \
-        _q_sole_returned_supplier
+    from etl_dados_ibge_sp_spark.queries.tpch import _q_sole_returned_supplier
     plan = _q_sole_returned_supplier(spark, sf_dir) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Join" in plan

@@ -77,7 +77,7 @@ def test_routed_queries_reuse_one_dir_per_site(spark):
     import hashlib
     import re
 
-    from etl_dados_ibge_sp_spark import registry_ext2 as r2
+    from etl_dados_ibge_sp_spark.queries import lakehouse as r2
     from etl_dados_ibge_sp_spark.streaming import windowed as W
 
     # The closed set of _events_stream call-site labels (grep the

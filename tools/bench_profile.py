@@ -34,8 +34,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
-from etl_dados_ibge_sp_spark.registry import (  # noqa: E402
-    all_queries_with_pending)
+from etl_dados_ibge_sp_spark.registry import all_queries  # noqa: E402
 from etl_dados_ibge_sp_spark.session import get_spark  # noqa: E402
 
 SAMPLE_EVERY = 25
@@ -94,7 +93,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="etl-ibge-bench-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries_with_pending()
+    queries = all_queries()
     names = sorted(queries)
 
     for t in ("lineitem", "orders", "customer", "supplier", "part",

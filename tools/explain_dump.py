@@ -22,8 +22,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
-from etl_dados_ibge_sp_spark.registry import (  # noqa: E402
-    all_queries_with_pending)
+from etl_dados_ibge_sp_spark.registry import all_queries  # noqa: E402
 from etl_dados_ibge_sp_spark.session import get_spark  # noqa: E402
 
 
@@ -35,7 +34,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries_with_pending()
+    qs = all_queries()
     for name in names:
         df = qs[name](spark, sf_dir)
         # Restore the PRIOR AQE value exception-safely (a failing

@@ -29,15 +29,13 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
-from etl_dados_ibge_sp_spark.registry import (  # noqa: E402
-    all_queries_with_pending)
+from etl_dados_ibge_sp_spark.registry import all_queries  # noqa: E402
 from etl_dados_ibge_sp_spark.session import get_spark  # noqa: E402
 
-# The audit covers the FULL query surface, same as bench.py (round 5
-# closed the last coverage cap: both now enumerate
-# all_queries_with_pending in sorted order — one source of truth, no
-# hand-maintained lists to drift).
-AUDITED = sorted(all_queries_with_pending())
+# The audit covers the FULL query surface, same as bench.py: both
+# enumerate all_queries in sorted order — one source of truth, no
+# hand-maintained lists to drift.
+AUDITED = sorted(all_queries())
 
 _KEEP = re.compile(
     r"^\s*(\*|\+-|:-|==)|PushedFilters|ReadSchema|PartitionFilters")
@@ -75,7 +73,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries_with_pending()
+    qs = all_queries()
 
     out = [
         "# PLANS — physical-plan audit of the headline queries",

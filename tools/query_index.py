@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Generate QUERIES.md: one line per query in the engine's surface —
-what it does (first docstring sentence), whether it is registered or
-queued, whether it carries a DuckDB oracle, which rounds the driver
-hash-verified it, and its pinned sf0.1 min-of-3 seconds.
+what it does (first docstring sentence), which rounds the driver
+hash-verified it, and its pinned sf0.1 min-of-3 seconds.  Every query
+is registered and carries a DuckDB oracle.
 
 Run: ``python tools/query_index.py`` (writes QUERIES.md).  Pure
 metadata pass — no SparkSession is created.
@@ -20,9 +20,7 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
-from etl_dados_ibge_sp_spark import registry_pending as RP  # noqa: E402
-from etl_dados_ibge_sp_spark.registry import (  # noqa: E402
-    REGISTRY, all_oracle_sql, all_queries, all_queries_with_pending)
+from etl_dados_ibge_sp_spark.registry import all_queries  # noqa: E402
 
 
 def first_sentence(doc: str | None) -> str:
@@ -34,14 +32,7 @@ def first_sentence(doc: str | None) -> str:
 
 
 def main() -> None:
-    registered = all_queries()
-    everything = all_queries_with_pending()
-    oracles = all_oracle_sql()
-    pending_sql = {name: sql for name, sql, _fn in RP.PENDING}
-    pending_sql.update({name: sql for _minr, name, sql, _fn
-                        in RP.PENDING_GATED})
-    gate_round = {name: minr for minr, name, _sql, _fn
-                  in RP.PENDING_GATED}
+    queries = all_queries()
 
     verified: dict[str, list[int]] = {}
     newest_round = 0
@@ -62,11 +53,6 @@ def main() -> None:
         "",
         "Generated by `tools/query_index.py`; do not edit by hand.",
         "",
-        "* **status** — `registered` (driver surface, verification "
-        "rotation) or `queued` (registry_pending; oracle-checked in "
-        "pytest and the driver sim, admits when slots reopen).",
-        "* **oracle** — `sql` = DuckDB hash-compare oracle; `rows` = "
-        "rows-only driver check (non-SQL-expressible).",
         "* **driver-verified** — rounds with a green CORRECTNESS row, "
         f"as of CORRECTNESS_r{newest_round:02d} (a query re-generated "
         "at bench time, before the round's driver verification lands, "
@@ -74,32 +60,20 @@ def main() -> None:
         "round to pick up the newest rows).",
         "* **sf0.1 s** — pinned min-of-3 seconds from BENCH_full.json.",
         "",
-        "| query | status | oracle | driver-verified | sf0.1 s | what |",
-        "|---|---|---|---|---|---|",
+        "| query | driver-verified | sf0.1 s | what |",
+        "|---|---|---|---|",
     ]
-    for name in sorted(everything):
-        if name in registered:
-            status = "registered"
-            sql = oracles.get(name)
-            doc = REGISTRY[name].fn.__doc__
-        else:
-            status = (f"queued (gated ≥r{gate_round[name]})"
-                      if name in gate_round else "queued")
-            sql = pending_sql.get(name)
-            doc = everything[name].__doc__
-        oracle = "sql" if sql else "rows"
+    for name in sorted(queries):
         rounds = ",".join(f"r{r}" for r in verified.get(name, [])) or "—"
         secs = f"{bench[name]:.2f}" if name in bench else "—"
-        what = first_sentence(doc).replace("|", "\\|")
-        lines.append(f"| `{name}` | {status} | {oracle} | {rounds} "
-                     f"| {secs} | {what} |")
+        what = first_sentence(queries[name].__doc__).replace("|", "\\|")
+        lines.append(f"| `{name}` | {rounds} | {secs} | {what} |")
 
-    n_reg, n_all = len(registered), len(everything)
+    n_all = len(queries)
     lines += [
         "",
-        f"{n_all} queries total: {n_reg} registered, "
-        f"{n_all - n_reg} queued; "
-        f"{sum(1 for n in everything if n in verified)} have at least "
+        f"{n_all} queries total; "
+        f"{sum(1 for n in queries if n in verified)} have at least "
         "one green driver CORRECTNESS row "
         "(every query is oracle-checked in pytest each CI run "
         "regardless).",

@@ -153,7 +153,7 @@ class _Session:
 # ---------------------------------------------------------------------------
 
 def _semdedup_corpus(spark, sf_dir):
-    from etl_dados_ibge_sp_spark.registry_ext import planted_clusters
+    from etl_dados_ibge_sp_spark.queries._shared import planted_clusters
     from etl_dados_ibge_sp_spark.sources.parquet_source import load_table
     pl = planted_clusters(load_table(spark, sf_dir, "embeddings"))
     copies = pl.filter(F.col("vec_id") % 10 == 0).select(
@@ -178,7 +178,7 @@ def _neardup_corpus(spark, sf_dir):
 def _extra_leakage(sess: _Session, sf_dir: str, n_passes: int) -> dict:
     """Exact inverted-index vs LSH-banded candidate discovery for the
     cross-split leakage report (the r10 100 TB-substitution claim)."""
-    from etl_dados_ibge_sp_spark.registry_pending10 import leakage_pairs
+    from etl_dados_ibge_sp_spark.queries._shared import leakage_pairs
     out = {}
     for strat in ("inverted", "lsh"):
         out[f"leakage_pairs_{strat}"] = _min_of(
@@ -249,9 +249,9 @@ EXTRAS = {"leakage": _extra_leakage, "semdedup": _extra_semdedup,
 
 def measure(sess: _Session, sf_dir: str, queries: list[str],
             extras: list[str], n_passes: int) -> dict:
-    from etl_dados_ibge_sp_spark.registry import all_queries_with_pending
+    from etl_dados_ibge_sp_spark.registry import all_queries
     out: dict = {}
-    qs = all_queries_with_pending()
+    qs = all_queries()
     tag = os.path.basename(sf_dir)
 
     def emit(name: str, rec) -> None:
